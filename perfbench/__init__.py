@@ -1,0 +1,5 @@
+"""Layered benchmark for the monthly batch and the index lifecycles.
+
+Run ``python3 perfbench/run.py --workload <name> --seed <n> --seconds <s>
+--trace <0|1>`` from the repository root; see ``perfbench/README.md``.
+"""
