@@ -7,7 +7,6 @@ the reference's own key name.
 from __future__ import annotations
 
 import os
-from datetime import datetime
 
 
 def build_manifest(opts: dict[str, str], timestamp: str | None = None) -> str:
@@ -34,5 +33,9 @@ def parse_manifest(text: str) -> dict[str, str]:
 
 
 def read_manifest(out_dir: str) -> dict[str, str]:
-    with open(os.path.join(out_dir, "_MANIFEST"), encoding="utf-8") as f:
-        return parse_manifest(f.read())
+    """Read back a manifest through the carrier seam (io/fs.py), so it
+    comes from the same backend :func:`write_manifest` put it on."""
+    from batch_process_dpla_index_spark.io.fs import get_fs, strip_scheme
+
+    key = os.path.join(strip_scheme(out_dir), "_MANIFEST")
+    return parse_manifest(get_fs(out_dir).read(key))

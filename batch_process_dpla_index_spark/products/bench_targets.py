@@ -22,6 +22,7 @@ from collections.abc import Callable
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from batch_process_dpla_index_spark.session import run_concurrently
 from batch_process_dpla_index_spark.sources.tables import load_table
 
 
@@ -130,8 +131,6 @@ def _bench_ann_index_imi(spark: SparkSession, sf_dir: str, work_dir: str) -> int
     # stored index; neither fills local[32], so overlap them on two
     # driver threads (guide §2.6 — the takedown-lifecycle pattern).
     # The count sum is order-free.
-    from concurrent.futures import ThreadPoolExecutor
-
     def _serve() -> int:
         spark.sparkContext.setJobDescription("ann imi: serve")
         return ann_query_indexed(
@@ -144,10 +143,7 @@ def _bench_ann_index_imi(spark: SparkSession, sf_dir: str, work_dir: str) -> int
             spark, queries, "vec_id", "embedding", idx, k=5, n_probe=4
         ).count()
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        serve_f = pool.submit(_serve)
-        recall_f = pool.submit(_recall)
-        return serve_f.result() + recall_f.result()
+    return sum(run_concurrently(spark, [_serve, _recall]))
 
 
 def _bench_index_lifecycle(spark: SparkSession, sf_dir: str, work_dir: str) -> int:
@@ -477,12 +473,7 @@ def _bench_takedown_lifecycle(
     # one leg's scheduling gaps back-fill the other's (guide §2.6,
     # the modality_dup_report pattern). Fixed consumption order keeps
     # the returned count deterministic (integer sum, order-free).
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        text_f = pool.submit(_text_leg)
-        image_f = pool.submit(_image_leg)
-        return text_f.result() + image_f.result()
+    return sum(run_concurrently(spark, [_text_leg, _image_leg]))
 
 
 PRODUCT_BENCHES: dict[str, Callable[[SparkSession, str, str], int]] = {

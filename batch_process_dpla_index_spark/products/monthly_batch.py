@@ -15,6 +15,7 @@ Input layout (the master-dataset contract, S3FileHelper.scala:20-31):
 
 from __future__ import annotations
 
+import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
@@ -38,6 +39,8 @@ def mq_reports_step(spark: SparkSession, parquet_out: str, out_dir: str) -> str:
 class BatchResult:
     steps_run: list[str] = field(default_factory=list)
     outputs: dict[str, str] = field(default_factory=dict)
+    #: wall time of each step that succeeded, keyed like ``steps_run``
+    step_seconds: dict[str, float] = field(default_factory=dict)
     failed_step: str | None = None
     error: str | None = None
 
@@ -58,7 +61,9 @@ def execute(
         if result.failed_step:
             return None
         try:
+            start = time.perf_counter()
             out = fn()
+            result.step_seconds[step] = time.perf_counter() - start
             result.steps_run.append(step)
             result.outputs[step] = str(out)
             return out

@@ -64,6 +64,7 @@ from batch_process_dpla_index_spark.operators.similarity import (
     ivf_topk,
     lsh_ann_topk,
 )
+from batch_process_dpla_index_spark.session import run_concurrently
 from batch_process_dpla_index_spark.sources.tables import load_table
 from batch_process_dpla_index_spark.streaming.windows import (
     session_agg,
@@ -1084,8 +1085,6 @@ def q_modality_dup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the corpus feeds both the signature pass and the survivor id
     # scan off the same cache. The audio corpus (pad-twin variant) is
     # persisted the same way for its two in-chain consumers.
-    from concurrent.futures import ThreadPoolExecutor
-
     blob_corpus = _blob_corpus_with_variants(spark, sf_dir).persist()
     audio_corpus = _audio_corpus_with_twins(spark, sf_dir).persist()
     deps += [blob_corpus, audio_corpus]
@@ -1094,15 +1093,12 @@ def q_modality_dup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("audio", _audio_survivors_from, audio_corpus),
         ("video", _video_survivors_from, blob_corpus),
     )
-    with ThreadPoolExecutor(max_workers=len(chains)) as pool:
-        futures = [
-            (modality, pool.submit(surv_fn, corpus))
-            for modality, surv_fn, corpus in chains
-        ]
-        for modality, fut in futures:
-            kept = fut.result()
-            out = out.unionByName(row(modality, kept))
-            deps += getattr(kept, "_cached_deps", [])
+    survivors = run_concurrently(
+        spark, [lambda f=f, c=c: f(c) for _, f, c in chains]
+    )
+    for (modality, _, _), kept in zip(chains, survivors):
+        out = out.unionByName(row(modality, kept))
+        deps += getattr(kept, "_cached_deps", [])
     return _with_cached_deps(out.orderBy("modality"), deps)
 
 

@@ -11,8 +11,12 @@ nested DPLA model, and Arrow for any pandas-UDF exchange.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from typing import TypeVar
 
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
 
 #: Confs applied at session build time. Keys that are runtime-settable are
 #: also re-asserted by :func:`tune` so the engine behaves identically on a
@@ -86,6 +90,31 @@ def ship_package(spark: SparkSession) -> None:
         # reach executors must then be self-contained.
         pass
     _PYFILES_SHIPPED.add(key)
+
+
+def run_concurrently(spark: SparkSession, thunks: list[Callable[[], T]]) -> list[T]:
+    """Run ``thunks`` on one driver thread each; return their results in
+    order, raising the first failure once every thunk has finished.
+
+    Each thread starts with its own copy of the caller's local
+    properties (job group, description, scheduler pool) and session
+    tags — a bare pool thread would submit its jobs outside the
+    caller's job group. Spark's FIFO scheduler hands cores an earlier
+    job leaves idle to the later ones.
+    """
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    def inherit(fn: Callable[[], T]) -> Callable[[], T]:
+        # one capture per thunk: threads that set their own job
+        # description must not share a properties object
+        wrap = inheritable_thread_target(spark)
+        return fn if wrap is spark else wrap(fn)  # pinned-thread mode off
+
+    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
+        futures = [pool.submit(inherit(t)) for t in thunks]
+    return [f.result() for f in futures]
 
 
 def tune(spark: SparkSession) -> SparkSession:

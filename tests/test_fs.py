@@ -251,6 +251,25 @@ def test_sinks_route_through_registered_carrier():
         fs_mod._REGISTRY.pop("mem", None)
 
 
+def test_manifest_round_trip_on_registered_carrier():
+    """A manifest written to a registered store reads back from it."""
+    from batch_process_dpla_index_spark.io import fs as fs_mod
+    from batch_process_dpla_index_spark.io.manifest import read_manifest, write_manifest
+
+    mem = MemoryFilesystem()
+    register_fs("mem", mem)
+    try:
+        out = "mem://bucket/jsonl/2026/10/hubA.jsonl"
+        write_manifest({"Record count": "40"}, out, timestamp="2026-10-01T00:00:00Z")
+        assert list(mem.objects) == [f"{out}/_MANIFEST"]
+        assert read_manifest(out) == {
+            "Record count": "40",
+            "Start date/time of file generation": "2026-10-01T00:00:00Z",
+        }
+    finally:
+        fs_mod._REGISTRY.pop("mem", None)
+
+
 def test_unregistered_scheme_is_a_clear_error():
     with pytest.raises(NotImplementedError, match="scheme 's3'"):
         get_fs("s3://bucket/key")

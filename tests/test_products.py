@@ -75,6 +75,78 @@ def test_jsonl_dump_invariants(spark, tmp_path):
     assert counts2 == counts
 
 
+def _jsonl_inputs(spark, tmp_path, sizes: dict[str, int]) -> dict[str, str]:
+    paths = {}
+    for hub, n in sizes.items():
+        paths[hub] = str(tmp_path / "in" / hub)
+        spark.range(n).select(
+            F.concat(F.lit('{"id":'), "id", F.lit("}")).alias("value")
+        ).write.text(paths[hub])
+    return paths
+
+
+def test_jsonl_dump_counts_empty_hub_as_zero(spark, tmp_path):
+    """A hub whose input holds no data file (only _SUCCESS) reports 0:
+    its observed count arrives, and the dump does not wait forever."""
+    import threading
+
+    paths = _jsonl_inputs(spark, tmp_path, {"hubA": 30})
+    empty = tmp_path / "in" / "hubEmpty"
+    empty.mkdir()
+    (empty / "_SUCCESS").write_text("")
+    paths["hubEmpty"] = str(empty)
+    out = str(tmp_path / "out")
+    got: dict = {}
+    t = threading.Thread(
+        target=lambda: got.update(jsonl_dump.execute(spark, paths, out)),
+        daemon=True,
+    )
+    t.start()
+    t.join(timeout=120)
+    assert not t.is_alive(), "jsonl dump did not finish within 120 s"
+    assert got == {"hubA": 30, "hubEmpty": 0, "__all__": 30}
+    assert read_manifest(f"{out}/hubEmpty.jsonl")["Record count"] == "0"
+    assert read_manifest(f"{out}/all.jsonl")["Total record count"] == "30"
+
+
+def test_jsonl_dump_writes_run_in_callers_job_group(spark, tmp_path):
+    """The concurrent writes keep the caller's job group: one job per
+    provider write plus the union write, all under the group."""
+    paths = _jsonl_inputs(spark, tmp_path, {"hubA": 20, "hubB": 10, "hubC": 5})
+    sc = spark.sparkContext
+    group = f"jsonl-test-{os.getpid()}"
+    sc.setJobGroup(group, "jsonl dump job-group test")
+    try:
+        jsonl_dump.execute(spark, paths, str(tmp_path / "out"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= len(paths) + 1
+
+
+def test_jsonl_dump_leaves_no_cache(spark, tmp_path):
+    paths = _jsonl_inputs(spark, tmp_path, {"hubA": 20, "hubB": 10})
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    jsonl_dump.execute(spark, paths, str(tmp_path / "out"))
+    assert jsc.getPersistentRDDs().size() == before
+
+
+def test_jsonl_dump_missing_input_raises_before_delete(spark, tmp_path):
+    """Every input is resolved before any output is deleted: a missing
+    provider path leaves last run's dump in place."""
+    from pyspark.errors import AnalysisException
+
+    paths = _jsonl_inputs(spark, tmp_path, {"hubA": 20})
+    out = str(tmp_path / "out")
+    jsonl_dump.execute(spark, paths, out)
+    paths["hubGone"] = str(tmp_path / "in" / "hubGone")
+    with pytest.raises(AnalysisException):
+        jsonl_dump.execute(spark, paths, out)
+    assert read_manifest(f"{out}/hubA.jsonl")["Record count"] == "20"
+    assert read_manifest(f"{out}/all.jsonl")["Total record count"] == "20"
+
+
 @pytest.mark.parametrize("exact", [False, True])
 def test_sitemap_invariants(spark, docs, tmp_path, exact):
     out = str(tmp_path / f"sitemap_{exact}")
@@ -273,6 +345,8 @@ def test_monthly_batch_sequencing(spark, docs_small, tmp_path):
     result = monthly_batch.execute(spark, root, out, "https://cdn.x/s")
     assert result.failed_step is None, result
     assert result.steps_run == ["parquet", "jsonl", "mq", "sitemap"]
+    assert list(result.step_seconds) == result.steps_run
+    assert all(t > 0 for t in result.step_seconds.values())
     # downstream consumption: mq CSV rows cover every doc
     rows = read_csv_single(glob.glob(f"{out}/mq/*/*/provider.csv")[0])
     assert sum(int(r["count"]) for r in rows) == docs_small.count()
@@ -290,6 +364,7 @@ def test_monthly_batch_halts_on_failure(spark, tmp_path):
     )
     assert result.failed_step == "parquet"
     assert result.steps_run == []
+    assert result.step_seconds == {}
 
 
 def test_fs_seam_scheme_dispatch(tmp_path):
